@@ -432,19 +432,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "createindex":
-        from petasearch_spark.functions.kmer import AMINO_ALPHABET
         from petasearch_spark.operators.kmer_index import (
             build_kmer_index,
             write_kmer_index,
             write_sharded_layout,
         )
+        from petasearch_spark.plans.search import SearchParams
 
-        if args.alphabet == "nucl":
-            from petasearch_spark.functions.scoring import NUCL_ALPHABET
-
-            alpha = NUCL_ALPHABET
-        else:
-            alpha = AMINO_ALPHABET
+        alpha = SearchParams(alphabet=args.alphabet).codes
         seqs = load_target(spark, args.target_fasta)
         if args.layout == "sharded":
             write_sharded_layout(

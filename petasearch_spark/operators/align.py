@@ -588,14 +588,20 @@ def align_pairs(
     batch-constant scalar, and ``set_col`` names the DB tag so the
     target-sequence fetch joins on (target_id, set) — two sets may
     legitimately carry the same target_id. Requires pre-grouped input
-    (prefilter_grouped)."""
+    (prefilter_grouped). ``set_col`` without ``db_residues`` or
+    ``db_residues_col`` raises: one total summed over every set would
+    give each DB's e-values the wrong search space."""
+    if set_col and db_residues is None and db_residues_col is None:
+        raise ValueError(
+            "align_pairs: set_col needs db_residues or db_residues_col —"
+            " a corpus total over all sets would mis-scale every e-value"
+        )
     # db_residues (the Karlin-Altschul search-space total) defaults to a
     # LAZY broadcast 1-row aggregate instead of an eager .collect()
     # (round-10 optimization, guide §5/§2.6): the collect was a blocking
-    # driver job before the main query even launched — and
-    # search_multi_target paid it once per target set, serially. As a
-    # broadcast column it computes inside the same job, overlapped with
-    # every other stage; the 1-row crossJoin is the package's documented
+    # driver job before the main query even launched. As a broadcast
+    # column it computes inside the same job, overlapped with every
+    # other stage; the 1-row crossJoin is the package's documented
     # BroadcastNestedLoopJoin pattern (tests/test_plan_antipatterns.py).
     # greatest(coalesce(sum,1),1) == the old `collect()[0][0] or 1`.
     lazy_dbr = db_residues is None and db_residues_col is None

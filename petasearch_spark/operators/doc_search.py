@@ -175,6 +175,30 @@ def derived_sequences(docs: DataFrame) -> DataFrame:
     )
 
 
+def _corpus_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as the sequences(seq_id, accession, header,
+    sequence) frame every sequence-side registry entry searches."""
+    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
+    return derived_sequences(docs).drop("source")
+
+
+def _search_frames(
+    spark: SparkSession, sf_dir: str, query_mod: int, target_sets: int | None = None
+):
+    """(queries, targets) of the full-search registry entries: every
+    ``query_mod``-th sequence searched against the whole corpus — or,
+    with ``target_sets=N``, against N target DBs (the corpus split by
+    seq_id % N). The sequences feed index build, query k-mer extraction,
+    both alignment fetch joins AND the db-residue count — persisted so
+    the regexp derivation runs once (at real scale this table is a
+    parquet ingest artifact, persisted by definition)."""
+    seqs = _corpus_sequences(spark, sf_dir).persist()
+    queries = seqs.filter(F.col("seq_id") % query_mod == 0)
+    if target_sets is None:
+        return queries, seqs
+    return queries, [seqs.filter(F.col("seq_id") % target_sets == i) for i in range(target_sets)]
+
+
 DERIVED_SEQ_SQL = f"""
     seqs AS (
         SELECT doc_id AS seq_id,
@@ -422,9 +446,7 @@ def protein_prefilter_bucketed_build(spark: SparkSession, sf_dir: str) -> DataFr
         write_query_kmers_bucketed,
     )
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 20 == 0)
+    queries, seqs = _search_frames(spark, sf_dir, 20)
     write_kmer_index_bucketed(build_kmer_index(seqs), "ps_bench_index_b")
     write_query_kmers_bucketed(extract_query_kmers(queries), "ps_bench_qk_b")
     # the writes above are eager; return a trivial catalog listing so the
@@ -494,9 +516,8 @@ def _build_sharded_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
     over the derived-sequences corpus."""
     from petasearch_spark.operators.kmer_index import write_sharded_layout
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
     write_sharded_layout(
-        derived_sequences(docs).drop("source"), out_dir, num_shards=SHARDED_NUM_SHARDS
+        _corpus_sequences(spark, sf_dir), out_dir, num_shards=SHARDED_NUM_SHARDS
     )
 
 
@@ -537,28 +558,28 @@ def protein_prefilter_sharded_build(spark: SparkSession, sf_dir: str) -> DataFra
     return literal_df(spark, [(root,)], "path string")
 
 
-def _sharded_pruned_pairs(
-    spark: SparkSession, root: str, qk, persisted: list | None = None
-) -> DataFrame:
-    """Shard-pruned prefilter core: ONE persisted query-k-mer frame
-    serves both the shard-list collect (the prune mechanism) and the
-    probe side of the join (VERDICT r9 item 4 — unpersisted, the
-    mapInPandas extraction ran twice). The persist is released by the
-    caller's clearCache / session teardown (the plans/search.py
-    convention) — or, when ``persisted`` is given (the streaming probe's
-    flat-cache contract, streaming/ann_stream.py), tracked there for
-    per-batch release."""
-    from petasearch_spark.operators.kmer_index import read_layout_index_pruned
+def _sharded_pruned_pairs(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
+    """Shard-pruned prefilter of the corpus sequences matching
+    ``query_pred`` against the sharded layout (built first if missing).
+    ONE persisted query-k-mer frame serves both the shard-list collect
+    (the prune mechanism) and the probe side of the join (VERDICT r9
+    item 4 — unpersisted, the mapInPandas extraction ran twice); the
+    persist is released by the caller's clearCache / session teardown."""
+    from petasearch_spark.operators.kmer_index import (
+        extract_query_kmers,
+        read_layout_index_pruned,
+    )
     from petasearch_spark.operators.prefilter import prefilter_counts
 
-    qk = qk.persist()
-    if persisted is not None:
-        persisted.append(qk)
+    root = _ensure_sharded_layout(spark, sf_dir)
+    qk = extract_query_kmers(_corpus_sequences(spark, sf_dir).filter(query_pred)).persist()
     # generation-aware (append_sharded_layout deltas fold in at probe
     # time); with no deltas this is exactly the old single-scan plan.
     # Both consumers are count queries, so the fused count form applies
     # (round 11): no member-row window sort, map-side partial counts.
-    return prefilter_counts(qk, read_layout_index_pruned(spark, root, qk))
+    return prefilter_counts(qk, read_layout_index_pruned(spark, root, qk)).orderBy(
+        "query_id", "target_id"
+    )
 
 
 def protein_prefilter_sharded_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,13 +588,7 @@ def protein_prefilter_sharded_query(spark: SparkSession, sf_dir: str) -> DataFra
     Output is identical to protein_prefilter (integer and string k-mer
     paths are bijective), so the combined registry entry shares its
     DuckDB oracle; builds the layout first if missing."""
-    from petasearch_spark.operators.kmer_index import extract_query_kmers
-
-    root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
-    qk = extract_query_kmers(seqs.filter(F.col("seq_id") % 20 == 0))
-    return _sharded_pruned_pairs(spark, root, qk).orderBy("query_id", "target_id")
+    return _sharded_pruned_pairs(spark, sf_dir, F.col("seq_id") % 20 == 0)
 
 
 def protein_prefilter_sharded_probe1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,13 +596,7 @@ def protein_prefilter_sharded_probe1(spark: SparkSession, sf_dir: str) -> DataFr
     probed against the on-disk index — the pruned scan touches only the
     shards this query's ~190 k-mers hash to (bench-only entry; the
     full-batch twin above carries the oracle)."""
-    from petasearch_spark.operators.kmer_index import extract_query_kmers
-
-    root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
-    qk = extract_query_kmers(seqs.filter(F.col("seq_id") == 0))
-    return _sharded_pruned_pairs(spark, root, qk).orderBy("query_id", "target_id")
+    return _sharded_pruned_pairs(spark, sf_dir, F.col("seq_id") == 0)
 
 
 def protein_prefilter_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,11 +607,20 @@ def protein_prefilter_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return protein_prefilter_sharded_query(spark, sf_dir)
 
 
-def _sharded_search(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
-    """Interactive END-TO-END search against the on-disk sharded layout
-    (VERDICT r9 item 3 — the reference's headline use-case is a few
-    proteins vs a huge SRA index, /root/reference/README.md:1-3, run as
-    the full pipeline data/petasearch.sh:42-65, not prefilter alone).
+def sharded_search_queries(
+    spark: SparkSession,
+    sf_dir: str,
+    queries: DataFrame,
+    root: str | None = None,
+    persisted: list | None = None,
+) -> DataFrame:
+    """Interactive END-TO-END search of an ARBITRARY query-sequence frame
+    against the on-disk sharded layout (VERDICT r9 item 3 — the
+    reference's headline use-case is a few proteins vs a huge SRA index,
+    README.md:1-3 of the reference, run as the full pipeline
+    data/petasearch.sh:42-65, not prefilter alone). The batch registry
+    entries, the streaming probe (streaming/search_stream.py) and the
+    ingest stream all run this one core, so the paths cannot drift.
     Every corpus-sized input is pruned to the query:
 
       1. k-mer probe reads only the shards the query's k-mers hash to
@@ -616,28 +634,10 @@ def _sharded_search(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
          (and hence the funnel) match the batch path exactly.
 
     Output schema + ordering match protein_search (the batch flagship),
-    whose oracle the registry entry shares."""
-    root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
-    # the query side IS the user's input in the interactive case — tiny
-    # by definition; here it is carved out of the corpus so the result
-    # is comparable to the batch flagship
-    return sharded_search_queries(spark, sf_dir, seqs.filter(query_pred), root=root)
-
-
-def sharded_search_queries(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    root: str | None = None,
-    persisted: list | None = None,
-) -> DataFrame:
-    """The interactive cascade for an ARBITRARY query-sequence frame —
-    the core both the batch registry entries and the streaming probe
-    (streaming/search_stream.py) run, so the two paths cannot drift.
-    ``persisted`` follows the streaming flat-cache contract: every frame
-    this call persists is appended there for per-batch release."""
+    whose oracle the registry entries share. ``root`` defaults to the
+    corpus's own layout (built if absent). ``persisted`` follows the
+    streaming flat-cache contract: every frame this call persists is
+    appended there for per-batch release."""
     from petasearch_spark.plans.search import search_sharded_layout
 
     if root is None:
@@ -655,15 +655,19 @@ def protein_search_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden oracle; any drift between the pruned and full-scan paths
     breaks the driver's value hash), but index scan AND sequence fetch
     are partition-pruned to the query (plan-pinned in
-    tests/test_skew_pruning.py)."""
-    return _sharded_search(spark, sf_dir, F.col("seq_id") % 20 == 0)
+    tests/test_skew_pruning.py). The query side IS the user's input in
+    the interactive case; here it is carved out of the corpus so the
+    result is comparable to the batch flagship."""
+    seqs = _corpus_sequences(spark, sf_dir)
+    return sharded_search_queries(spark, sf_dir, seqs.filter(F.col("seq_id") % 20 == 0))
 
 
 def protein_search_sharded_probe1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE query end-to-end against the on-disk layout — the interactive
     latency shape (bench-only entry; the full-batch twin above carries
     the oracle)."""
-    return _sharded_search(spark, sf_dir, F.col("seq_id") == 0)
+    seqs = _corpus_sequences(spark, sf_dir)
+    return sharded_search_queries(spark, sf_dir, seqs.filter(F.col("seq_id") == 0))
 
 
 #: the delta twin's corpus split: base = seq_id % 5 != 4 (~80%), one
@@ -694,8 +698,7 @@ def _build_sharded_delta_layout(spark: SparkSession, sf_dir: str, out_dir: str) 
         write_sharded_layout,
     )
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _corpus_sequences(spark, sf_dir)
     arrived = F.col("seq_id") % _DELTA_SPLIT_MOD == _DELTA_SPLIT_REM
     write_sharded_layout(
         seqs.filter(~arrived), out_dir, num_shards=SHARDED_NUM_SHARDS
@@ -722,8 +725,7 @@ def protein_search_sharded_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sharded_delta_root(sf_dir),
         lambda tmp: _build_sharded_delta_layout(spark, sf_dir, tmp),
     )
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _corpus_sequences(spark, sf_dir)
     return sharded_search_queries(
         spark, sf_dir, seqs.filter(F.col("seq_id") % 20 == 0), root=root
     )
@@ -754,9 +756,7 @@ def protein_expand_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.operators.prefilter import prefilter_counts
     from petasearch_spark.operators.similar_kmers import expand_query_kmers
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
+    queries, seqs = _search_frames(spark, sf_dir, 100)
     eqk = expand_query_kmers(extract_query_kmers(queries))
     # fused count form (round 11): same GROUP BY/HAVING as the oracle,
     # no member-row window sort + re-count
@@ -828,9 +828,7 @@ def protein_ungapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
     from petasearch_spark.operators.prefilter import prefilter_grouped
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 20 == 0)
+    queries, seqs = _search_frames(spark, sf_dir, 20)
     # fused grouped form (round 11): the rescore kernel consumes per-pair
     # k-mer lists and sorts diagonals internally — no window sort upstream;
     # sort_via_exchange: the rescore kernel must not re-run for the final
@@ -971,16 +969,8 @@ def protein_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SW."""
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    # the sequences table feeds index build, query k-mer extraction, both
-    # alignment fetch joins AND the db-residue count — persist so the
-    # regexp derivation runs once (at real scale this table is a parquet
-    # ingest artifact, persisted by definition)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 20 == 0)
-    res = search(queries, seqs)
     # drop the self-hit-dominated float columns that are stable but bulky
-    return res.select(*SEARCH_INT_COLS)
+    return search(*_search_frames(spark, sf_dir, 20)).select(*SEARCH_INT_COLS)
 
 
 PROTEIN_SEARCH_SQL = f"""
@@ -1010,10 +1000,7 @@ def protein_search_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.operators.align import DEFAULT_XDROP
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 20 == 0)
-    res = search(queries, seqs, mask=True, xdrop=DEFAULT_XDROP)
+    res = search(*_search_frames(spark, sf_dir, 20), mask=True, xdrop=DEFAULT_XDROP)
     return res.select(*SEARCH_INT_COLS)
 
 
@@ -1046,9 +1033,7 @@ def protein_prefilter_biased(spark: SparkSession, sf_dir: str) -> DataFrame:
         expand_query_kmers,
     )
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
+    queries, seqs = _search_frames(spark, sf_dir, 100)
     eqk = expand_query_kmers(
         extract_query_kmers(queries), bias=composition_bias_kmer(queries)
     )
@@ -1109,10 +1094,7 @@ def protein_search_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is independently verified by protein_expand_prefilter."""
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
-    res = search(queries, seqs, expand_similar=True)
+    res = search(*_search_frames(spark, sf_dir, 100), expand_similar=True)
     return res.select(*SEARCH_INT_COLS)
 
 
@@ -1130,8 +1112,6 @@ ORDER BY query_id, target_id
 
 
 def _search_index_path(sf_dir: str) -> str:
-    import os
-
     return f"/tmp/ps_bench_search_idx_{os.path.basename(sf_dir.rstrip('/'))}"
 
 
@@ -1146,8 +1126,7 @@ def protein_search_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_kmer_index,
     )
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _corpus_sequences(spark, sf_dir)
     write_kmer_index(build_kmer_index(seqs), _search_index_path(sf_dir))
     return literal_df(spark, [(_search_index_path(sf_dir),)], "index_path string")
 
@@ -1158,17 +1137,12 @@ def protein_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     petasearch step reading a stored k-mer table). Output must equal
     protein_search exactly (tests/test_search_e2e.py pins it); builds
     the index first if missing."""
-    import os
-
     from petasearch_spark.plans.search import search
 
     path = _search_index_path(sf_dir)
     if not os.path.exists(path):
         protein_search_index_build(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 20 == 0)
-    res = search(queries, seqs, target_index=spark.read.parquet(path))
+    res = search(*_search_frames(spark, sf_dir, 20), target_index=spark.read.parquet(path))
     return res.select(*SEARCH_INT_COLS)
 
 
@@ -1186,11 +1160,7 @@ def protein_search_multi_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching protein_search_expanded."""
     from petasearch_spark.plans.search import search_multi_target
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
-    targets = [seqs.filter(F.col("seq_id") % 3 == i) for i in range(3)]
-    res = search_multi_target(queries, targets, expand_similar=True)
+    res = search_multi_target(*_search_frames(spark, sf_dir, 100, 3), expand_similar=True)
     return res.select(*SEARCH_INT_COLS)
 
 
@@ -1204,9 +1174,7 @@ def protein_search_multi_target_maxseqs(spark: SparkSession, sf_dir: str) -> Dat
     tests/test_search_e2e.py."""
     from petasearch_spark.plans.search import search_multi_target
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
-    targets = [seqs.filter(F.col("seq_id") % 3 == i) for i in range(3)]
-    res = search_multi_target(queries, targets, expand_similar=True, max_seqs=5)
+    res = search_multi_target(
+        *_search_frames(spark, sf_dir, 100, 3), expand_similar=True, max_seqs=5
+    )
     return res.select(*SEARCH_INT_COLS)

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
 from typing import Iterator
 
 import numpy as np
@@ -256,8 +258,16 @@ def write_kmer_index_sharded(
 #: CONTENT identity (file names + sizes + mtime_ns, the staged_cache
 #: fingerprint convention) is exact: a rebuilt/compacted layout gets a
 #: new key, a missing sidecar still fails loudly through the uncached
-#: Spark read.
-_META_CACHE: dict[tuple, dict] = {}
+#: Spark read. Least-recently-used entries are evicted past
+#: _META_CACHE_CAP, so a long-lived process that probes many layouts
+#: (or one rebuilt many times) holds a bounded cache.
+_META_CACHE: OrderedDict[tuple, dict] = OrderedDict()
+#: well above the two sidecars (index + store) per generation one probe
+#: reads, so a probe of a layout with up to 128 generations stays cached
+_META_CACHE_CAP = 256
+#: guards lookup+reorder and insert+evict (streaming batches probe from
+#: their own threads)
+_META_LOCK = threading.Lock()
 
 
 def _sidecar_cache_key(path: str) -> tuple | None:
@@ -275,20 +285,31 @@ def _sidecar_cache_key(path: str) -> tuple | None:
         return None  # absent/unreadable: let the Spark read raise loudly
 
 
+def _read_sidecar(spark, path: str, fields: tuple[str, ...]) -> dict:
+    """``fields`` of the dataset's ``_ps_meta`` sidecar as a plain dict
+    (a field an older sidecar lacks reads as None), cached in-process on
+    the sidecar's content identity (see _META_CACHE)."""
+    ck = _sidecar_cache_key(path)
+    if ck is not None:
+        with _META_LOCK:
+            if ck in _META_CACHE:
+                _META_CACHE.move_to_end(ck)
+                return dict(_META_CACHE[ck])
+    row = spark.read.parquet(path + "/_ps_meta").head().asDict()
+    out = {f: row.get(f) for f in fields}
+    if ck is not None:
+        with _META_LOCK:
+            _META_CACHE[ck] = dict(out)
+            if len(_META_CACHE) > _META_CACHE_CAP:
+                _META_CACHE.popitem(last=False)
+    return out
+
+
 def read_kmer_index_meta(spark, path: str) -> dict:
     """The sharded index's sidecar as a plain dict (num_shards, and —
     for layouts written since round 10 — the k and alphabet the index
     was built with; None on older layouts)."""
-    ck = _sidecar_cache_key(path)
-    if ck is not None and ck in _META_CACHE:
-        return dict(_META_CACHE[ck])
-    row = spark.read.parquet(path + "/_ps_meta").head()
-    d = row.asDict()
-    d.setdefault("k", None)
-    d.setdefault("alphabet", None)
-    if ck is not None:
-        _META_CACHE[ck] = dict(d)
-    return d
+    return _read_sidecar(spark, path, ("num_shards", "k", "alphabet"))
 
 
 def read_kmer_index_pruned(
@@ -455,20 +476,10 @@ def read_sequence_store_meta(spark, path: str) -> dict:
     db_residues, schema_json, and — for stores written since the delta
     path landed — max_seq_id, None on older stores). A missing sidecar
     means the store is mid-write or absent — loud AnalysisException,
-    never a silent mis-prune. Cached in-process on the sidecar's content
-    identity (see _META_CACHE)."""
-    ck = _sidecar_cache_key(path)
-    if ck is not None and ck in _META_CACHE:
-        return dict(_META_CACHE[ck])
-    row = spark.read.parquet(path + "/_ps_meta").head()
-    d = row.asDict()
-    d.setdefault("max_seq_id", None)
-    out = {
-        k: d[k] for k in ("num_shards", "db_residues", "schema_json", "max_seq_id")
-    }
-    if ck is not None:
-        _META_CACHE[ck] = dict(out)
-    return out
+    never a silent mis-prune."""
+    return _read_sidecar(
+        spark, path, ("num_shards", "db_residues", "schema_json", "max_seq_id")
+    )
 
 
 def read_sequence_store_pruned(

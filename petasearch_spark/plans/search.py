@@ -7,12 +7,21 @@ is one lazily-composed DataFrame lineage: Catalyst fuses the projections,
 pushes filters into the parquet scans, and the only materialization points
 are the prefilter shuffle and the Arrow hop into the alignment kernel.
 
-Multi-target orchestration (J5, petasearch.sh:42-65: one shell job per
-target DB, concatenated at the end) becomes a `unionByName` of per-target
-lineages — Spark's scheduler replaces the hand-rolled job fan-out.
+ONE cascade (`_cascade`): query k-mers -> `prefilter_grouped` ->
+`align_pairs` -> O6 ordering, driven by ONE validated option set
+(`SearchParams`). The public entry points are thin adapters that supply
+only where the k-mer index comes from and how target sequences are
+fetched: an in-memory or stored index (`search`), a pruned read of the
+sharded layout (`search_sharded_layout`), or a ``_set``-tagged union of
+several target DBs (`search_multi_target`, J5 — petasearch.sh:42-65 runs
+one shell job per DB and concatenates; here the per-DB relations are one
+plan keyed by the tag). `funnel_report` counts over the same cascade.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,45 +35,95 @@ from petasearch_spark.operators.kmer_index import (
 )
 from petasearch_spark.operators.prefilter import (
     DEFAULT_REQ_KMER_MATCHES,
-    prefilter,
     prefilter_grouped,
 )
 
 
-def build_query_kmers(
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    expand_similar: bool = False,
-    kmer_threshold: int | None = None,
-    kmer_max_per_pos: int | None = None,
-    mask: bool = False,
-    compo_bias: bool = False,
-    alphabet: str = "amino",
-) -> DataFrame:
-    """The query-side k-mer table exactly as `search` would build it
-    (masking -> extraction -> optional T2/T4 expansion). Factored out so
-    `search_multi_target` can compute it ONCE and share it across target
-    sets — the reference recomputes it per target DB (one
-    comparekmertables process each, petasearch.sh:42-65); persisting one
-    table across N probes is the Spark-native improvement."""
-    if alphabet == "nucl":
-        from petasearch_spark.functions.scoring import NUCL_ALPHABET
+@dataclass(frozen=True)
+class SearchParams:
+    """Every option of the search cascade, in ONE place: each entry point
+    builds ``SearchParams(**options)``, so a misspelled or foreign option
+    raises ``TypeError`` instead of being silently dropped.
 
-        alpha = NUCL_ALPHABET
-        # nucleotide-mode expansion degenerates to exact matching (see
-        # the parity note in `search`)
-        expand_similar = False
-    else:
+    ``expand_similar=True`` turns on T2 similar-k-mer expansion (the
+    reference's default sensitivity mode, --exact-kmer-matching 0);
+    False is the reference's exact mode (comparekmertables.cpp:263).
+    ``kmer_threshold``/``kmer_max_per_pos`` None = the reference defaults
+    (--k-score 225, --max-kmer-per-pos 20); ``compo_bias`` raises the
+    threshold in biased regions (T4, comparekmertables.cpp:196-253).
+    ``mask=True`` runs T3 low-complexity masking over the QUERY sequences
+    before k-mer extraction (--mask 1, comparekmertables.cpp:214-231);
+    alignment still uses the unmasked residues, as in the reference.
+    ``xdrop`` None keeps full banded Gotoh — the engine's written
+    divergence decision (operators/align.py DEFAULT_XDROP note); pass
+    align.DEFAULT_XDROP for the reference's frontier termination.
+    ``max_seqs`` is the per-query top-k engine extra (absent in the
+    reference, blockalign.cpp:411-414).
+
+    The alphabet decision lives here too — the reference's dbtype branch
+    (comparekmertables.cpp:129-143): amino (BLOSUM62, 11/1 gaps) or
+    nucleotide (+2/-3 match/mismatch, ACGT codes, N invalid)."""
+
+    k: int = DEFAULT_K
+    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES
+    max_evalue: float = DEFAULT_EVALUE
+    expand_similar: bool = False
+    kmer_threshold: int | None = None
+    kmer_max_per_pos: int | None = None
+    mask: bool = False
+    compo_bias: bool = False
+    alphabet: str = "amino"
+    max_seqs: int | None = None
+    xdrop: int | None = None
+
+    def __post_init__(self):
+        if self.alphabet not in ("amino", "nucl"):
+            raise ValueError(
+                f"alphabet must be 'amino' or 'nucl', not {self.alphabet!r}"
+            )
+
+    @property
+    def codes(self) -> str:
+        """The residue alphabet the k-mer codes are built over."""
+        if self.alphabet == "nucl":
+            from petasearch_spark.functions.scoring import NUCL_ALPHABET
+
+            return NUCL_ALPHABET
         from petasearch_spark.functions.kmer import AMINO_ALPHABET
 
-        alpha = AMINO_ALPHABET
-    if mask:
+        return AMINO_ALPHABET
+
+    @property
+    def scoring(self) -> dict:
+        """align_pairs' matrix and Karlin-Altschul keyword arguments."""
+        from petasearch_spark.functions import scoring as s
+
+        if self.alphabet == "nucl":
+            return dict(matrix=s.NUCL_MATRIX, ka_ungapped=s.KA_NUCL_UNGAPPED,
+                        ka_gapped=s.KA_NUCL_GAPPED)
+        return dict(matrix=s.BLOSUM62, ka_ungapped=s.KA_UNGAPPED,
+                    ka_gapped=s.KA_GAPPED_11_1)
+
+    @property
+    def expands(self) -> bool:
+        """Whether the query k-mers get T2 expansion. Reference parity
+        (nucl): nucleotide mode scores with NucleotideMatrix at scale 1.0
+        (comparekmertables.cpp:135), where the k-score default 225
+        exceeds any 9-mer self-score (9×2=18) — generateKmerList can
+        never emit, so expansion degenerates to exact matching."""
+        return self.expand_similar and self.alphabet != "nucl"
+
+
+def build_query_kmers(queries: DataFrame, p: SearchParams) -> DataFrame:
+    """The query-side k-mer table of the cascade: masking -> extraction
+    -> optional T2/T4 expansion."""
+    if p.mask:
         from petasearch_spark.operators.masking import mask_sequences
 
-        qk = extract_query_kmers(mask_sequences(queries), k=k, alphabet=alpha)
+        qk = extract_query_kmers(mask_sequences(queries), k=p.k, alphabet=p.codes)
     else:
-        qk = extract_query_kmers(queries, k=k, alphabet=alpha)
-    if expand_similar:
+        qk = extract_query_kmers(queries, k=p.k, alphabet=p.codes)
+    if p.expands:
         from petasearch_spark.operators.similar_kmers import (
             DEFAULT_KMER_THRESHOLD,
             DEFAULT_MAX_PER_POS,
@@ -74,34 +133,12 @@ def build_query_kmers(
 
         qk = expand_query_kmers(
             qk,
-            k=k,
-            threshold=kmer_threshold if kmer_threshold is not None else DEFAULT_KMER_THRESHOLD,
-            max_per_pos=kmer_max_per_pos if kmer_max_per_pos is not None else DEFAULT_MAX_PER_POS,
-            # T4: per-position composition bias raises the similar-k-mer
-            # threshold inside biased regions (comparekmertables.cpp:196-253)
-            bias=composition_bias_kmer(queries, k=k) if compo_bias else None,
+            k=p.k,
+            threshold=p.kmer_threshold if p.kmer_threshold is not None else DEFAULT_KMER_THRESHOLD,
+            max_per_pos=p.kmer_max_per_pos if p.kmer_max_per_pos is not None else DEFAULT_MAX_PER_POS,
+            bias=composition_bias_kmer(queries, k=p.k) if p.compo_bias else None,
         )
     return qk
-
-
-def _alphabet_params(alphabet: str):
-    """The reference's dbtype branch (comparekmertables.cpp:129-143) —
-    amino (BLOSUM62, 11/1 gaps) or nucleotide (+2/-3 match/mismatch,
-    ACGT codes, N invalid) — shared by the full-scan and sharded-layout
-    cascades so a mode can never drift between them."""
-    if alphabet == "nucl":
-        from petasearch_spark.functions.scoring import (
-            KA_NUCL_GAPPED,
-            KA_NUCL_UNGAPPED,
-            NUCL_ALPHABET,
-            NUCL_MATRIX,
-        )
-
-        return NUCL_ALPHABET, NUCL_MATRIX, KA_NUCL_UNGAPPED, KA_NUCL_GAPPED
-    from petasearch_spark.functions.kmer import AMINO_ALPHABET
-    from petasearch_spark.functions.scoring import BLOSUM62, KA_GAPPED_11_1, KA_UNGAPPED
-
-    return AMINO_ALPHABET, BLOSUM62, KA_UNGAPPED, KA_GAPPED_11_1
 
 
 def _rank_and_order(alignments: DataFrame, max_seqs: int | None) -> DataFrame:
@@ -132,95 +169,88 @@ def _rank_and_order(alignments: DataFrame, max_seqs: int | None) -> DataFrame:
     )
 
 
+class _Cascade(NamedTuple):
+    query_kmers: DataFrame
+    index: DataFrame
+    pairs: DataFrame  # prefilter_grouped output: one row per surviving pair
+    hits: DataFrame  # alignments, O6-ordered (and max_seqs-capped)
+
+
+def _cascade(
+    queries: DataFrame,
+    p: SearchParams,
+    index_for: Callable[[DataFrame], DataFrame],
+    fetch: Callable[[DataFrame], tuple[DataFrame, DataFrame, dict]],
+    extra_keys: tuple[str, ...] = (),
+    persisted: list | None = None,
+) -> _Cascade:
+    """The search cascade every entry point runs. ``index_for(qk)``
+    returns the target k-mer index to probe with the query k-mers;
+    ``fetch(pairs)`` returns ``(pairs, targets, align_kwargs)`` — the
+    (possibly annotated) grouped pairs, the target sequences to align
+    against, and the e-value/kernel-width options of that source.
+    ``extra_keys`` are index-side grouping columns (the multi-target
+    ``_set`` tag). With ``persisted`` given, the query k-mers (read more
+    than once by the pruned and multi-target sources) are persisted and
+    appended there."""
+    qk = build_query_kmers(queries, p)
+    if persisted is not None:
+        qk = qk.persist()
+        persisted.append(qk)
+    index = index_for(qk)
+    # fused prefilter+collection (round 11): the aligner consumes per-pair
+    # k-mer LISTS, so the HAVING count and the list collection run as ONE
+    # aggregation — no member-row count window (a full sort of every
+    # joined match row) in the cascade
+    pairs = prefilter_grouped(
+        qk, index, req_kmer_matches=p.req_kmer_matches, extra_keys=extra_keys
+    )
+    kernel_pairs, targets, align_kwargs = fetch(pairs)
+    alignments = align_pairs(
+        kernel_pairs, queries, targets, k=p.k, max_evalue=p.max_evalue,
+        alphabet=p.codes, xdrop=p.xdrop, **p.scoring, **align_kwargs,
+    )
+    return _Cascade(qk, index, pairs, _rank_and_order(alignments, p.max_seqs))
+
+
+def _inline_cascade(
+    queries: DataFrame, targets: DataFrame, target_index: DataFrame | None,
+    p: SearchParams,
+) -> _Cascade:
+    """The cascade over an in-memory target set: probe ``target_index``,
+    or an index built from ``targets``; e-values over all of ``targets``."""
+    def index_for(_qk: DataFrame) -> DataFrame:
+        if target_index is not None:
+            return target_index
+        return build_kmer_index(targets, k=p.k, alphabet=p.codes)
+
+    return _cascade(queries, p, index_for, lambda pairs: (pairs, targets, {}))
+
+
 def search(
     queries: DataFrame,
     targets: DataFrame,
     target_index: DataFrame | None = None,
-    k: int = DEFAULT_K,
-    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
-    max_evalue: float = DEFAULT_EVALUE,
-    expand_similar: bool = False,
-    kmer_threshold: int | None = None,
-    kmer_max_per_pos: int | None = None,
-    mask: bool = False,
-    compo_bias: bool = False,
-    alphabet: str = "amino",
-    max_seqs: int | None = None,
-    xdrop: int | None = None,
-    query_kmers: DataFrame | None = None,
-    db_residues: int | None = None,
-    ordered: bool = True,
+    **options,
 ) -> DataFrame:
     """queries/targets: sequences(seq_id, accession, header, sequence).
-
-    ``ordered=False`` skips the final O6 sort (and per-call ``max_seqs``)
-    and returns the raw alignments — for callers that rank the UNION of
-    several searches themselves (search_multi_target with a global
-    max_seqs): each branch's sort would be discarded by the global
-    window anyway, and its range exchange re-executes the branch's
-    alignment kernel for RangePartitioner sampling (functions/ordering.py).
-
-    ``expand_similar=True`` turns on T2 similar-k-mer expansion (the
-    reference's default sensitivity mode, --exact-kmer-matching 0);
-    False is the reference's exact mode (comparekmertables.cpp:263).
-    ``mask=True`` runs T3 low-complexity masking over the QUERY sequences
-    before k-mer extraction (the reference's --mask 1,
-    comparekmertables.cpp:214-231) — extraction's X-window skip then
-    suppresses repeat-driven probes. Alignment still uses the unmasked
-    residues, as in the reference.
+    ``target_index``: a stored k-mer index over ``targets`` (O1 layout)
+    to probe instead of building one; ``options``: `SearchParams`.
 
     Returns the alignments DataFrame (FIXTURES.md §1), sorted query-keyed
     by (evalue ASC, bits DESC, tlen ASC, target_id ASC) — the reference's
     O6 ordering (matcherResultsSort, blockalign.cpp:534-550) made *global*
     instead of per-thread (SURVEY §2.6 notes ours is strictly better).
     """
-    alpha, matrix, ka_u, ka_g = _alphabet_params(alphabet)
-
-    if target_index is None:
-        target_index = build_kmer_index(targets, k=k, alphabet=alpha)
-    # Reference parity note (nucl): nucleotide mode scores with
-    # NucleotideMatrix at scale 1.0 (comparekmertables.cpp:135) where the
-    # k-score default 225 exceeds any 9-mer self-score (9×2=18) —
-    # generateKmerList can never emit, so expansion degenerates to exact
-    # matching (build_query_kmers enforces it).
-    qk = query_kmers if query_kmers is not None else build_query_kmers(
-        queries, k=k, expand_similar=expand_similar,
-        kmer_threshold=kmer_threshold, kmer_max_per_pos=kmer_max_per_pos,
-        mask=mask, compo_bias=compo_bias, alphabet=alphabet,
-    )
-    # fused prefilter+collection (round 11): the aligner consumes per-pair
-    # k-mer LISTS, so the HAVING count and the list collection run as ONE
-    # aggregation — the member-row count window (a full sort of every
-    # joined match row) disappears from the cascade
-    pairs = prefilter_grouped(qk, target_index, req_kmer_matches=req_kmer_matches)
-    # xdrop=None (default) keeps full banded Gotoh — the engine's written
-    # divergence decision (operators/align.py DEFAULT_XDROP note); pass
-    # align.DEFAULT_XDROP for the reference's frontier termination.
-    alignments = align_pairs(
-        pairs, queries, targets, k=k, max_evalue=max_evalue,
-        alphabet=alpha, matrix=matrix, ka_ungapped=ka_u, ka_gapped=ka_g,
-        xdrop=xdrop, db_residues=db_residues,
-    )
-    if not ordered:
-        return alignments
-    return _rank_and_order(alignments, max_seqs)
+    return _inline_cascade(queries, targets, target_index, SearchParams(**options)).hits
 
 
 def search_sharded_layout(
     queries: DataFrame,
     layout_root: str,
-    k: int = DEFAULT_K,
-    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
-    max_evalue: float = DEFAULT_EVALUE,
-    expand_similar: bool = False,
-    kmer_threshold: int | None = None,
-    kmer_max_per_pos: int | None = None,
-    mask: bool = False,
-    compo_bias: bool = False,
-    alphabet: str = "amino",
-    max_seqs: int | None = None,
-    xdrop: int | None = None,
+    *,
     persisted: list | None = None,
+    **options,
 ) -> DataFrame:
     """The full cascade against an on-disk SHARDED interactive layout
     (``<root>/index`` kmer shards + ``<root>/seqs`` sequence store,
@@ -229,11 +259,10 @@ def search_sharded_layout(
     prefilter's candidate ids, and the e-value normalization reads the
     store sidecar's corpus-total ``db_residues`` instead of scanning
     anything. Semantics and output are ``search()``'s exactly (same
-    knobs, same ordering); only the I/O shape differs — 1M-scale record
-    in BASELINE.md round 10. Every frame this call persists goes to
-    ``persisted`` when given (the streaming flat-cache contract);
-    otherwise release is the caller's clearCache, the search()
-    convention."""
+    options, same ordering); only the I/O shape differs — 1M-scale record
+    in BASELINE.md round 10. The query k-mers and the grouped pairs are
+    persisted (each feeds a driver collect AND the cascade); both go to
+    ``persisted`` when given (the streaming flat-cache contract)."""
     import os
 
     from petasearch_spark.operators.kmer_index import (
@@ -243,78 +272,69 @@ def search_sharded_layout(
         read_layout_store_pruned,
     )
 
+    p = SearchParams(**options)
     spark = queries.sparkSession
+    held = [] if persisted is None else persisted
     # delta generations (append_sharded_layout): base first, fold order —
     # probes resolve the J2 rule over the pruned union, so a grown layout
     # answers exactly like a full rebuild (tests/test_sharded_delta.py)
     gens = list_layout_generations(layout_root)
-    alpha, matrix, ka_u, ka_g = _alphabet_params(alphabet)
     # ONE sidecar read per dataset per probe (round-10 review finding):
     # the index meta also validates build parameters — a probe with a
     # different k or alphabet would join on incompatible kmer codes and
     # return EMPTY results with exit 0, so refuse loudly instead
     # (layouts written before round 10 carry no k/alphabet: no check)
-    idx_path = os.path.join(layout_root, "index")
-    idx_meta = read_kmer_index_meta(spark, idx_path)
-    if idx_meta["k"] is not None and int(idx_meta["k"]) != k:
+    idx_meta = read_kmer_index_meta(spark, os.path.join(layout_root, "index"))
+    if idx_meta["k"] is not None and int(idx_meta["k"]) != p.k:
         raise ValueError(
             f"sharded layout at {layout_root} was built with k={idx_meta['k']}"
-            f" but the probe asked k={k} — rebuild the layout or match --k"
+            f" but the probe asked k={p.k} — rebuild the layout or match --k"
         )
-    if idx_meta["alphabet"] is not None and idx_meta["alphabet"] != alpha:
+    if idx_meta["alphabet"] is not None and idx_meta["alphabet"] != p.codes:
         raise ValueError(
             f"sharded layout at {layout_root} was built with alphabet"
-            f" {idx_meta['alphabet']!r} but the probe asked {alpha!r} —"
+            f" {idx_meta['alphabet']!r} but the probe asked {p.codes!r} —"
             f" rebuild the layout or match --alphabet"
         )
-    qk = build_query_kmers(
-        queries, k=k, expand_similar=expand_similar,
-        kmer_threshold=kmer_threshold, kmer_max_per_pos=kmer_max_per_pos,
-        mask=mask, compo_bias=compo_bias, alphabet=alphabet,
-    ).persist()
-    if persisted is not None:
-        persisted.append(qk)
-    idx = read_layout_index_pruned(spark, layout_root, qk, idx_meta=idx_meta, gens=gens)
-    # fused form (see search()): grouped pairs also make the candidate-id
-    # collect below cheaper — one row per pair instead of per match row
-    pairs = prefilter_grouped(qk, idx, req_kmer_matches=req_kmer_matches).persist()
-    if persisted is not None:
-        persisted.append(pairs)
-    candidate_ids = [
-        int(r["target_id"]) for r in pairs.select("target_id").distinct().collect()
-    ]
-    targets, db_residues = read_layout_store_pruned(
-        spark, layout_root, candidate_ids, gens=gens
-    )
-    db_residues = db_residues or 1
-    alignments = align_pairs(
-        pairs, queries, targets, k=k, max_evalue=max_evalue,
-        alphabet=alpha, matrix=matrix, ka_ungapped=ka_u, ka_gapped=ka_g,
-        xdrop=xdrop, db_residues=db_residues,
+
+    def index_for(qk: DataFrame) -> DataFrame:
+        return read_layout_index_pruned(spark, layout_root, qk, idx_meta=idx_meta, gens=gens)
+
+    def fetch(pairs: DataFrame):
+        # grouped pairs make the candidate-id collect cheap — one row per
+        # pair instead of per match row
+        pairs = pairs.persist()
+        held.append(pairs)
+        candidate_ids = [
+            int(r["target_id"]) for r in pairs.select("target_id").distinct().collect()
+        ]
+        targets, db_residues = read_layout_store_pruned(
+            spark, layout_root, candidate_ids, gens=gens
+        )
         # the kernel partitions by target_id, so |candidates| bounds its
         # useful width — interactive probes skip the mostly-empty wide
         # stage; large batches saturate to the default (align_pairs doc)
-        kernel_parts=len(candidate_ids),
-    )
-    return _rank_and_order(alignments, max_seqs)
+        return pairs, targets, dict(
+            db_residues=db_residues or 1, kernel_parts=len(candidate_ids)
+        )
+
+    return _cascade(queries, p, index_for, fetch, persisted=held).hits
 
 
 def search_multi_target(
     queries: DataFrame,
     target_sets: list[DataFrame],
-    **kwargs,
+    **options,
 ) -> DataFrame:
     """J5: search each target set, UNION ALL the results (§2.7) — the
     reference's per-DB shell-job fan-out + cat (petasearch.sh:42-65).
 
     FUSED plan (round 11, guide §2.4): where the reference runs one
-    process per target DB and round 10 ran one cascade lineage per DB
-    (N index aggregations, N prefilter joins, N kernel stages, N
-    1-row db_residues cross joins), the per-DB relations here are ONE
-    plan keyed by a ``_set`` tag:
+    process per target DB, the per-DB relations here are ONE plan keyed
+    by a ``_set`` tag:
 
-    * the query-side k-mer table is built ONCE and persisted (as before
-      — pinned by tests/test_search_e2e.py);
+    * the query-side k-mer table is built ONCE and persisted (pinned by
+      tests/test_search_e2e.py);
     * per-set extraction unions into ONE J2 aggregation grouped by
       (kmer, _set) — exactly N per-set ``build_kmer_index`` relations
       in one exchange (operators.kmer_index.aggregate_kmer_index);
@@ -329,10 +349,7 @@ def search_multi_target(
 
     Result parity with N independent ``search`` calls is pinned by
     tests/test_search_e2e.py::test_multi_target_equals_per_target_union.
-    Output ordering is the O6 global order (round 11: the old
-    union-of-sorted-branches concatenation order was an artifact of the
-    branch plans; sorting once is both cheaper and the stronger
-    contract).
+    Output ordering is the O6 global order.
 
     ``max_seqs`` here is GLOBAL: the per-query top-k runs ONCE over the
     UNION of all target sets (round-6; what a user of the flag means —
@@ -345,33 +362,18 @@ def search_multi_target(
         extract_kmers_arrow,
     )
 
-    max_seqs = kwargs.pop("max_seqs", None)
-    k = kwargs.get("k", DEFAULT_K)
-    req = kwargs.get("req_kmer_matches", DEFAULT_REQ_KMER_MATCHES)
-    max_evalue = kwargs.get("max_evalue", DEFAULT_EVALUE)
-    alphabet = kwargs.get("alphabet", "amino")
-    xdrop = kwargs.get("xdrop")
-    db_residues = kwargs.get("db_residues")
-    alpha, matrix, ka_u, ka_g = _alphabet_params(alphabet)
-    qk_keys = ("k", "expand_similar", "kmer_threshold", "kmer_max_per_pos",
-               "mask", "compo_bias", "alphabet")
-    qk = build_query_kmers(
-        queries, **{kw: kwargs[kw] for kw in qk_keys if kw in kwargs}
-    ).persist()
+    p = SearchParams(**options)
     # project early (§2.3) — only the columns the cascade touches ride
     # the tagged union
     tagged = None
     tagged_kmers = None
     for i, t in enumerate(target_sets):
         ti = t.select("seq_id", "accession", "sequence").withColumn("_set", F.lit(i))
-        ki = extract_kmers_arrow(t, k=k, alphabet=alpha).withColumn("_set", F.lit(i))
+        ki = extract_kmers_arrow(t, k=p.k, alphabet=p.codes).withColumn("_set", F.lit(i))
         tagged = ti if tagged is None else tagged.unionByName(ti)
         tagged_kmers = ki if tagged_kmers is None else tagged_kmers.unionByName(ki)
-    idx = aggregate_kmer_index(tagged_kmers, extra_keys=("_set",))
-    pairs = prefilter_grouped(qk, idx, req_kmer_matches=req, extra_keys=("_set",))
-    if db_residues is not None:
-        pairs = pairs.withColumn("_dbr", F.lit(int(db_residues)).cast("long"))
-    else:
+
+    def fetch(pairs: DataFrame):
         # per-set Karlin-Altschul totals — same greatest(coalesce(sum,1),1)
         # law as align_pairs' lazy single-DB aggregate, one tiny broadcast
         dbrs = tagged.groupBy("_set").agg(
@@ -380,66 +382,42 @@ def search_multi_target(
                 F.lit(1).cast("long"),
             ).alias("_dbr")
         )
-        pairs = pairs.join(F.broadcast(dbrs), "_set")
-    alignments = align_pairs(
-        pairs, queries, tagged, k=k, max_evalue=max_evalue,
-        alphabet=alpha, matrix=matrix, ka_ungapped=ka_u, ka_gapped=ka_g,
-        xdrop=xdrop, db_residues_col="_dbr", set_col="_set",
-    )
-    return _rank_and_order(alignments, max_seqs)
+        return pairs.join(F.broadcast(dbrs), "_set"), tagged, dict(
+            db_residues_col="_dbr", set_col="_set"
+        )
+
+    # persisted=[]: the query k-mers are persisted, and released by the
+    # caller's clearCache
+    return _cascade(
+        queries, p,
+        lambda _qk: aggregate_kmer_index(tagged_kmers, extra_keys=("_set",)),
+        fetch, extra_keys=("_set",), persisted=[],
+    ).hits
 
 
-def funnel_report(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int = DEFAULT_K,
-    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
-    max_evalue: float = DEFAULT_EVALUE,
-    **kwargs,
-) -> dict:
+def funnel_report(queries: DataFrame, targets: DataFrame, **options) -> dict:
     """A4: the reference's runtime funnel counters as a run report.
 
     Mirrors comparekmertables.cpp:463,495,587,619 (equal k-mers, hit rows,
     rows after HAVING) and blockalign.cpp:465-481 (alignments passed,
-    hits/query). Each number is one lazily-planned count over the shared
-    lineage — Spark computes them as separate narrow jobs; use for
-    diagnostics, not in the hot path."""
-    # thread the alphabet into the funnel's own index lineage so
-    # nucleotide-mode reports count over the same tables the search uses
-    if kwargs.get("alphabet") == "nucl":
-        from petasearch_spark.functions.scoring import NUCL_ALPHABET
-
-        alpha = NUCL_ALPHABET
-    else:
-        from petasearch_spark.functions.kmer import AMINO_ALPHABET
-
-        alpha = AMINO_ALPHABET
-    index = build_kmer_index(targets, k=k, alphabet=alpha)
-    # the funnel counts the SAME query k-mer table the reported search
-    # probes (masking/expansion/nucl degeneration included) — shared
-    # construction, not a re-implementation
-    qk = build_query_kmers(
-        queries, k=k,
-        expand_similar=bool(kwargs.get("expand_similar")),
-        kmer_threshold=kwargs.get("kmer_threshold"),
-        kmer_max_per_pos=kwargs.get("kmer_max_per_pos"),
-        mask=bool(kwargs.get("mask")),
-        compo_bias=bool(kwargs.get("compo_bias")),
-        alphabet=kwargs.get("alphabet", "amino"),
+    hits/query). Every number counts a frame of the SAME cascade
+    ``search(queries, targets, **options)`` runs — its query k-mers,
+    index, grouped prefilter pairs and hits — as a separate job; use for
+    diagnostics, not in the hot path. ``prefilter_rows`` (the member
+    rows surviving HAVING) is the summed per-pair k-mer list length:
+    each grouped pair collects exactly its member rows."""
+    c = _inline_cascade(queries, targets, None, SearchParams(**options))
+    matches = c.query_kmers.join(
+        c.index.select("kmer", F.col("seq_id").alias("target_id")), "kmer"
     )
-    matches = qk.join(index.select("kmer", F.col("seq_id").alias("target_id")), "kmer")
-    pairs = prefilter(qk, index, req_kmer_matches=req_kmer_matches)
-    ali = search(queries, targets, target_index=index, k=k,
-                 req_kmer_matches=req_kmer_matches, max_evalue=max_evalue,
-                 query_kmers=qk, **kwargs)
     n_queries = queries.count()
     report = {
-        "query_kmers": qk.count(),
-        "index_kmers": index.count(),
+        "query_kmers": c.query_kmers.count(),
+        "index_kmers": c.index.count(),
         "equal_kmers": matches.count(),
-        "prefilter_rows": pairs.count(),
-        "prefilter_pairs": pairs.select("query_id", "target_id").distinct().count(),
-        "alignments_passed": ali.count(),
+        "prefilter_rows": c.pairs.agg(F.sum(F.size("kmers"))).head()[0] or 0,
+        "prefilter_pairs": c.pairs.count(),
+        "alignments_passed": c.hits.count(),
         "n_queries": n_queries,
     }
     report["hits_per_query"] = report["alignments_passed"] / max(1, n_queries)

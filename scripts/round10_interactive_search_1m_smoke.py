@@ -58,7 +58,7 @@ NUM_SHARDS = 4096
 
 
 def interactive_search(spark, root: str, queries, db_residues: int):
-    """The cascade exactly as doc_search._sharded_search composes it,
+    """The cascade exactly as doc_search.sharded_search_queries composes it,
     over the smoke layout (kept in sync by the equality assertion vs
     the full-scan search below)."""
     qk = extract_query_kmers(queries).persist()

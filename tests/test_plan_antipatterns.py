@@ -53,16 +53,13 @@ PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
 CUT_NODES = ("Exchange", "BroadcastExchange", "InMemoryTableScan")
 
 
-def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
-    """Python-kernel nodes reachable from an Exchange(rangepartitioning)
-    without crossing a shuffle/broadcast/cache boundary — i.e. kernels the
-    sort's RangePartitioner sampling job would re-execute."""
+def _range_exchange_ids(formatted_plan: str) -> set[int]:
+    """Node ids of the Exchange(rangepartitioning) nodes in a formatted plan."""
     import re
 
-    lines = formatted_plan.splitlines()
     range_ids = set()
     cur_id = None
-    for ln in lines:
+    for ln in formatted_plan.splitlines():
         m = re.match(r"\((\d+)\) Exchange\b", ln)
         if m:
             cur_id = int(m.group(1))
@@ -70,14 +67,29 @@ def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
             cur_id = None
         if cur_id is not None and "rangepartitioning" in ln:
             range_ids.add(cur_id)
-    # tree section: (indent_depth, node_name, node_id)
+    return range_ids
+
+
+def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
+    """Python-kernel nodes reachable from an Exchange(rangepartitioning)
+    without crossing a shuffle/broadcast/cache boundary — i.e. kernels the
+    sort's RangePartitioner sampling job would re-execute."""
+    import re
+
+    lines = formatted_plan.splitlines()
+    range_ids = _range_exchange_ids(formatted_plan)
+    # tree section: (indent_depth, node_name, node_id); "* " marks a node
+    # inside a whole-stage-codegen stage
     tree = []
     for ln in lines:
-        m = re.search(r"^([+\-:|\s]*)(\w+)[^(]*\((\d+)\)\s*$", ln)
+        m = re.search(r"^([+\-:|\s]*)(?:\* )?(\w+)[^(]*\((\d+)\)\s*$", ln)
         if m:
             tree.append((len(m.group(1)), m.group(2), int(m.group(3))))
         elif tree and ln.strip() == "":
             break
+    # an unparsed tree would make every plan pass (e.g. a changed
+    # explain format) — fail loudly instead
+    assert tree, f"no plan tree parsed from:\n{formatted_plan[:2000]}"
     hits = []
     for i, (ind, name, nid) in enumerate(tree):
         if nid not in range_ids:
@@ -109,15 +121,33 @@ def _formatted(df) -> str:
     return buf.getvalue()
 
 
+#: registry entries whose plan the guard above saw a range exchange in
+_RANGE_SORTED: list[str] = []
+
+
 @pytest.mark.parametrize("name", BATCH_QUERIES)
 def test_no_kernel_resampled_by_global_sort(spark, name):
     df = REGISTRY[name][0](spark, SF_DIR)
-    hits = _kernels_resampled_by_sort(_formatted(df))
+    formatted = _formatted(df)
+    if _range_exchange_ids(formatted):
+        _RANGE_SORTED.append(name)
+    hits = _kernels_resampled_by_sort(formatted)
     assert not hits, (
         f"{name}: the final sort's RangePartitioner sampling job re-executes"
         f" a Python kernel: {hits} — sort via functions.ordering."
         "sort_via_exchange so the sampling reads a shuffle instead"
     )
+
+
+def test_resampling_guard_sees_range_exchanges(spark):
+    """The guard above only bites if it recognises range exchanges at
+    all: if no registry plan parses to one, the check passes vacuously.
+    Reuses what the parametrized run recorded; when that run was
+    deselected, plans are built until one qualifies."""
+    assert _RANGE_SORTED or any(
+        _range_exchange_ids(_formatted(REGISTRY[n][0](spark, SF_DIR)))
+        for n in BATCH_QUERIES
+    ), "no registry plan has an Exchange(rangepartitioning) the guard parses"
 
 
 def test_sort_above_kernel_runs_kernel_once(spark, tmp_path):

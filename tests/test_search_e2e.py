@@ -4,10 +4,15 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
-from petasearch_spark.plans.search import search, search_multi_target
+from petasearch_spark.plans.search import (
+    search,
+    search_multi_target,
+    search_sharded_layout,
+)
 from petasearch_spark.sources.fasta import sequences_from_records
 from petasearch_spark.sources.m8 import M8_COLUMNS, to_m8
 
@@ -190,3 +195,42 @@ def test_multi_target_max_seqs_is_global_not_per_db(spark):
     assert got == want
     # per-DB capping would exceed 1 row for multi-DB-hit queries
     assert all(len(v) == 1 for v in got.values())
+
+
+@pytest.mark.parametrize(
+    "entry", [search, search_sharded_layout, search_multi_target],
+    ids=lambda f: f.__name__,
+)
+def test_unknown_search_option_raises(spark, tmp_path, entry):
+    """Every entry point validates its options through SearchParams: a
+    misspelled option, or one that belongs to another entry point, fails
+    loudly instead of running the search with the default."""
+    q, t = make_corpus(spark, random.Random(5))
+    target = {
+        search: t,
+        search_sharded_layout: str(tmp_path / "no_layout"),
+        search_multi_target: [t],
+    }[entry]
+    with pytest.raises(TypeError, match="max_eval"):
+        entry(q, target, max_eval=1e-3)
+    if entry is search_multi_target:
+        with pytest.raises(TypeError, match="target_index"):
+            entry(q, target, target_index=t)
+
+
+def test_align_pairs_set_col_needs_per_set_residues(spark):
+    """A set-tagged kernel input without per-set (or explicit) residue
+    totals would score every DB against the sum over all of them."""
+    from petasearch_spark.operators.align import align_pairs
+
+    q, t = make_corpus(spark, random.Random(6))
+    pairs = spark.createDataFrame(
+        [(0, 0, [1, 2, 3], [0, 1, 2], 0)],
+        "query_id long, target_id long, kmers array<long>,"
+        " qpositions array<int>, _set int",
+    )
+    tagged = t.withColumn("_set", F.lit(0))
+    with pytest.raises(ValueError, match="set_col"):
+        align_pairs(pairs, q, tagged, set_col="_set")
+    # either residue source makes the call legal
+    align_pairs(pairs, q, tagged, set_col="_set", db_residues=1000)

@@ -343,3 +343,91 @@ def test_sharded_layout_refuses_mismatched_probe_params(spark, tmp_path):
         search_sharded_layout(seqs, root)  # default probe k=9
     # matching parameters pass (and still find the self-hit)
     assert search_sharded_layout(seqs, root, k=7).count() > 0
+
+
+def test_sidecar_meta_cache_is_bounded_lru(spark, tmp_path, monkeypatch):
+    """The in-process sidecar cache holds at most _META_CACHE_CAP entries
+    (least recently used evicted first), however many distinct sidecars
+    a process reads — and a rewritten sidecar is a NEW key, never a
+    stale hit. The cap is shrunk here so the test writes a handful of
+    sidecars instead of hundreds."""
+    from collections import OrderedDict
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from petasearch_spark.operators import kmer_index
+
+    cap = 3
+    monkeypatch.setattr(kmer_index, "_META_CACHE_CAP", cap)
+    monkeypatch.setattr(kmer_index, "_META_CACHE", OrderedDict())
+
+    def write_sidecar(path: str, num_shards: int, part: str) -> None:
+        d = os.path.join(path, "_ps_meta")
+        os.makedirs(d, exist_ok=True)
+        for old in os.listdir(d):
+            os.remove(os.path.join(d, old))
+        pq.write_table(
+            pa.table({"num_shards": [num_shards], "k": [9], "alphabet": ["A"]}),
+            os.path.join(d, part),
+        )
+
+    paths = [str(tmp_path / f"idx{i}") for i in range(cap + 2)]
+    for i, p in enumerate(paths):
+        write_sidecar(p, i + 1, "part-0.parquet")
+        assert kmer_index.read_kmer_index_meta(spark, p)["num_shards"] == i + 1
+    assert len(kmer_index._META_CACHE) == cap
+
+    # a cached sidecar rewritten in place (new part file, as Spark's
+    # overwrite writes) reads its new content
+    write_sidecar(paths[-1], 99, "part-1.parquet")
+    assert kmer_index.read_kmer_index_meta(spark, paths[-1])["num_shards"] == 99
+    assert len(kmer_index._META_CACHE) == cap
+
+
+def test_sidecar_meta_cache_survives_concurrent_eviction(tmp_path, monkeypatch):
+    """Streaming batches probe from their own threads: lookups, reorders
+    and evictions of the shared cache must not race (a hit evicted
+    between the membership test and the reorder raised KeyError)."""
+    import sys
+    import threading
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    from petasearch_spark.operators import kmer_index
+
+    monkeypatch.setattr(kmer_index, "_META_CACHE_CAP", 2)
+    monkeypatch.setattr(kmer_index, "_META_CACHE", OrderedDict())
+    paths = []
+    for i in range(6):
+        d = tmp_path / f"idx{i}" / "_ps_meta"
+        d.mkdir(parents=True)
+        (d / "part-0.parquet").write_bytes(b"x" * (i + 1))
+        paths.append(str(tmp_path / f"idx{i}"))
+    row = SimpleNamespace(asDict=lambda: {"num_shards": 4, "k": 9, "alphabet": "A"})
+    fake_spark = SimpleNamespace(
+        read=SimpleNamespace(parquet=lambda p: SimpleNamespace(head=lambda: row))
+    )
+    errors: list[BaseException] = []
+
+    def hammer(offset: int) -> None:
+        try:
+            for j in range(300):
+                p = paths[(j + offset) % len(paths)]
+                assert kmer_index.read_kmer_index_meta(fake_spark, p)["num_shards"] == 4
+        except BaseException as e:  # noqa: BLE001 — re-raised on the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert len(kmer_index._META_CACHE) <= 2
